@@ -34,7 +34,7 @@ class ExtractConfig:
     default_route: str = DEFAULT_ROUTE
     use_filename: bool = True  # the reference's -n flag (pypdfocr.py:169-170)
     heavy_payload_bytes: int = HEAVY_PAYLOAD_BYTES
-    page_partitions: int | None = None  # None → 4 × defaultParallelism
+    page_partitions: int | None = None  # None → defaultParallelism
     # OCR kernel strategy: 'auto' resolves driver-side (envcheck) to
     # 'subprocess' when new-enough tesseract + gs exist on the executors'
     # image, else 'builtin' (the deterministic synthetic codec). Mirrors
@@ -66,9 +66,3 @@ class ExtractConfig:
     pdfinfo_binary: str = "pdfinfo"
     pdfimages_binary: str = "pdfimages"
     identify_binary: str = "identify"
-    # Heavy-path document reassembly engine. False (default): pure JVM
-    # aggregation (pipeline._jvm_reassemble) — collect_list + array_sort +
-    # array_join + ordered route reduction, no Python stage. True: the
-    # original applyInPandas reassembly, kept as the semantic cross-check
-    # (pytest pins the two row-identical on corpus + failure fixtures).
-    python_reassembly: bool = False

@@ -158,33 +158,109 @@ def build_corpus_row(doc_id: int, text: str, lang: str, source: str) -> dict:
 
 
 # ---------------------------------------------------------------- extraction
-def extract_doc_spans(payload: bytes) -> tuple[list[list[dict]], str]:
-    """Single-pass extraction to the span level: payload → (per-page span
-    lists, status). Spans are the engine's central nested type (SURVEY
-    §1.1 #4): line dicts with bbox/textangle/baseline and positioned words
-    (parse+placement, ref: pypdfocr/pypdfocr_pdf.py:269-351). HTML docs
-    carry no geometry → their single page is one synthetic line whose
-    words have empty boxes.
+# Page kinds of a page spec ``(kind, body)``. A SYNPDF page's body is its
+# JSON line; an HTML document is one page whose body is the whole payload.
+PDF_PAGE = "synpdf"
+HTML_PAGE = "html"
+
+
+def split_doc(payload: bytes) -> tuple[list[tuple[str, bytes]], int, float, str]:
+    """Payload dispatch, the first half of the extraction contract every
+    path shares: payload → (page specs, output dpi, page height in pt,
+    status). A byte split that parses only the first page, for the
+    geometry, so the heavy branch can run it before the salt and OCR each
+    page on its own task.
+
+    * SYNPDF → one ``(PDF_PAGE, line)`` spec per page line, geometry from
+      the first page (ref: pypdfocr/pypdfocr_gs.py:117-166); a non-UTF-8
+      page → no pages, ``decode_error``; a valid empty body → no pages;
+    * ``<!doctype``/``<html`` head → one ``(HTML_PAGE, payload)`` spec;
+    * anything else → no pages, ``unsupported``.
     """
-    if codec.is_syn_pdf(payload):
-        pages = codec.decode_doc(payload)
-        if pages is None:
-            return ([], "decode_error")
-        if not pages:
-            return ([], "ok")
-        geom = codec.detect_geometry(pages)
-        raster = codec.rasterize(pages, geom["output_dpi"])
-        hocr_doc = hocr.emit_hocr(raster)
-        return (
-            hocr.parse_hocr_all(hocr_doc, geom["height_pt"], geom["output_dpi"]),
-            "ok",
-        )
-    head = payload.lstrip()[:15].lower()
-    if head.startswith(b"<!doctype") or head.startswith(b"<html"):
+    geom = codec.detect_geometry([])
+    specs, status = [], "ok"
+    lines = codec.split_pages(payload)
+    if lines is None:
+        head = payload.lstrip()[:15].lower()
+        if head.startswith(b"<!doctype") or head.startswith(b"<html"):
+            specs = [(HTML_PAGE, payload)]
+        else:
+            status = "unsupported"
+    elif lines:
         try:
-            text = htmlx.strip_boilerplate(payload.decode("utf-8", errors="replace"))
-        except Exception:
-            return ([], "html_error")
+            # strict, as codec.decode_doc: a non-UTF-8 page fails the WHOLE
+            # document (MAGIC and the line breaks are ASCII, so one decode
+            # of the payload checks every page)
+            payload.decode("utf-8")
+        except UnicodeDecodeError:
+            return [], geom["output_dpi"], geom["height_pt"], "decode_error"
+        specs = [(PDF_PAGE, ln) for ln in lines]
+        first = _load_page(lines[0])
+        if first is not None:
+            try:
+                geom = codec.detect_geometry([first])
+            except Exception as exc:  # data error → status, never a raise
+                specs, status = [], f"error:{type(exc).__name__}"
+    return specs, geom["output_dpi"], geom["height_pt"], status
+
+
+def _load_page(body: bytes) -> dict | None:
+    """A SYNPDF page line → page dict; any line that is not UTF-8 JSON of
+    an object → ``None`` (graceful degradation, as codec.decode_doc)."""
+    try:
+        page = codec.loads_json(body)
+    except Exception:
+        return None
+    return page if isinstance(page, dict) else None
+
+
+def _page_hocr(body: bytes, output_dpi: int) -> str | None:
+    """hOCR of one SYNPDF page rasterized at the document's output dpi
+    (rasterize, ref: pypdfocr_gs.py:170-218; OCR, ref:
+    pypdfocr_tesseract.py:154-183); ``None`` when the line is undecodable."""
+    page = _load_page(body)
+    if page is None:
+        return None
+    return hocr.emit_hocr(codec.rasterize([page], output_dpi))
+
+
+def _html_text(body: bytes) -> tuple[str, str]:
+    try:
+        return htmlx.strip_boilerplate(body.decode("utf-8", errors="replace")), "ok"
+    except Exception:
+        return "", "html_error"
+
+
+def page_text(spec: tuple[str, bytes], output_dpi: int) -> tuple[str, str]:
+    """The page kernel, the second half of the contract: one page spec →
+    (page text, status). A page whose hOCR does not parse adds no text
+    and the document goes on (ref: pypdfocr/pypdfocr_pdf.py:276-281); an
+    undecodable page is ``decode_error``, a failed HTML strip
+    ``html_error``, and any other data error ``error:<Type>``."""
+    kind, body = spec
+    if kind == HTML_PAGE:
+        return _html_text(body)
+    try:
+        hocr_doc = _page_hocr(body, output_dpi)
+        if hocr_doc is None:
+            return "", "decode_error"
+        # text-only parse (hocr.page_texts_from_hocr); a one-page hOCR
+        # holds one page div, so index 0 is the page
+        texts = hocr.page_texts_from_hocr(hocr_doc)
+        return (texts[0] if texts else ""), "ok"
+    except Exception as exc:  # data error → status, never a raise
+        return "", f"error:{type(exc).__name__}"
+
+
+def page_spans(spec: tuple[str, bytes], output_dpi: int, height_pt: float) -> tuple[list[dict], str]:
+    """:func:`page_text` at the span level: one page spec → (hOCR line
+    spans with placement, status), same statuses. Spans are the engine's
+    central nested type (SURVEY §1.1 #4; parse + placement, ref:
+    pypdfocr/pypdfocr_pdf.py:269-351). HTML carries no geometry, so its
+    page is one synthetic line per text line, words with empty boxes."""
+    kind, body = spec
+    if kind == HTML_PAGE:
+        text, status = _html_text(body)
         lines = [
             {
                 "bbox": [], "textangle": 0, "baseline": [0.0, 0.0],
@@ -196,58 +272,44 @@ def extract_doc_spans(payload: bytes) -> tuple[list[list[dict]], str]:
             }
             for ln in text.split("\n") if ln
         ]
-        return ([lines], "ok")
-    return ([], "unsupported")
+        return lines, status
+    try:
+        hocr_doc = _page_hocr(body, output_dpi)
+        if hocr_doc is None:
+            return [], "decode_error"
+        return hocr.parse_hocr_page(hocr_doc, 1, height_pt, output_dpi), "ok"
+    except Exception as exc:  # data error → status, never a raise
+        return [], f"error:{type(exc).__name__}"
+
+
+def _extract(payload: bytes, kernel) -> tuple[list, str]:
+    """split → ``kernel`` per page → the first non-ok page status; a
+    failed document has no pages."""
+    specs, output_dpi, height_pt, status = split_doc(payload)
+    pages = []
+    for spec in specs:
+        page, page_status = kernel(spec, output_dpi, height_pt)
+        if page_status != "ok":
+            return [], page_status
+        pages.append(page)
+    return pages, status
 
 
 def extract_doc(payload: bytes) -> tuple[list[str], str]:
-    """Single-pass extraction: payload → (per-page texts, status).
+    """Single-document extraction: payload → (per-page texts, status).
 
-    The one kernel both Spark paths and the oracle call; the document
-    text is ``"\\n".join(pages)`` and the per-page list feeds the
+    The light branch and the oracle call this; the heavy branch runs the
+    same :func:`split_doc` and :func:`page_text` on separate tasks. The
+    document text is ``"\\n".join(pages)`` and the per-page list feeds the
     page-early-exit routing (P2, ref: pypdfocr_pdffiler.py:66-68).
     """
-    if codec.is_syn_pdf(payload):
-        pages = codec.decode_doc(payload)
-        if pages is None:
-            return ([], "decode_error")
-        if not pages:
-            return ([], "ok")
-        geom = codec.detect_geometry(pages)
-        raster = codec.rasterize(pages, geom["output_dpi"])
-        hocr_doc = hocr.emit_hocr(raster)
-        # r6: text-only parse — identical admission rules and text, skips
-        # the placement/fontspec work the text surface discards (the
-        # span-level pipeline keeps the full parse in extract_doc_spans)
-        return (hocr.page_texts_from_hocr(hocr_doc), "ok")
-    head = payload.lstrip()[:15].lower()
-    if head.startswith(b"<!doctype") or head.startswith(b"<html"):
-        try:
-            text = htmlx.strip_boilerplate(payload.decode("utf-8", errors="replace"))
-        except Exception:
-            return ([], "html_error")
-        return ([text], "ok")
-    return ([], "unsupported")
+    return _extract(payload, lambda spec, dpi, _height: page_text(spec, dpi))
 
 
-def extract_payload(payload: bytes) -> tuple[str, int, str]:
-    """The single-document extraction kernel: payload → (extracted_text,
-    n_pages, status). Thin wrapper over :func:`extract_doc`.
-
-    PDF path = the reference dataflow: decode ("pdfimages/identify",
-    ref: pypdfocr_gs.py:117-166) → geometry → rasterize at output dpi
-    ("gs", ref: pypdfocr_gs.py:170-218) → hOCR per page ("tesseract",
-    ref: pypdfocr_tesseract.py:154-183) → parse + reassemble
-    (ref: pypdfocr_pdf.py:269-351). HTML path = boilerplate strip.
-    """
-    pages, status = extract_doc(payload)
-    return ("\n".join(pages), len(pages), status)
-
-
-def extract_page_texts(payload: bytes) -> list[str]:
-    """Per-page extracted texts (for the page-early-exit routing, P2)."""
-    pages, status = extract_doc(payload)
-    return pages
+def extract_doc_spans(payload: bytes) -> tuple[list[list[dict]], str]:
+    """:func:`extract_doc` at the span level: payload → (per-page span
+    lists, status)."""
+    return _extract(payload, page_spans)
 
 
 def oracle_extract(rows: list[dict], targets, default: str) -> list[dict]:

@@ -25,6 +25,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -95,11 +96,16 @@ def commit(extracted: DataFrame, out_dir: str, run_id: str | None = None) -> dic
 
 def committed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Urls already present in the committed output table, or None if no
-    snapshot exists yet."""
+    snapshot exists yet. A table that exists but cannot be read raises:
+    reading it as "nothing committed" would re-run the whole corpus and
+    append it again."""
     try:
-        return spark.read.parquet(f"{out_dir}/extracted").select("url").distinct()
-    except Exception:
-        return None
+        committed = spark.read.parquet(f"{out_dir}/extracted")
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+    return committed.select("url").distinct()
 
 
 def resume_filter(corpus_df: DataFrame, out_dir: str) -> DataFrame:

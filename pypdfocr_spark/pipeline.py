@@ -8,9 +8,9 @@ Logical plan::
       ├─ light docs (payload ≤ threshold):
       │    mapInPandas(extract_doc)                 # whole doc in one task, NO shuffle
       └─ heavy docs (payload > threshold):          # the skew tail
-           mapInPandas(explode_pages)               # doc → per-page rows
+           mapInPandas(explode_pages)               # split_doc: doc → per-page rows
            → repartition(K, xxhash64(url, page_no)) # salt: spread one doc's pages
-           → mapInPandas(extract_page)              # per-page OCR+parse+norm+route-match
+           → mapInPandas(extract_page)              # page_text + norm + route-match
            → groupBy(url).agg(...)                  # JVM reassembly: collect_list
                                                     #   + array_sort + array_join +
                                                     #   ordered route reduction
@@ -27,15 +27,18 @@ Why this shape at 100 TB:
   (SURVEY §4: salt *pages*, AQE can't split a row).
 * The reassembly shuffle only carries (url, page_no, page_text) — the
   extracted strings, not the raster payloads.
-* All Python work is Arrow-batched ``mapInPandas``; per-batch failure
+* Both branches run the same extraction contract, ``corpus.split_doc``
+  then ``corpus.page_text`` per page, so a document's output does not
+  depend on which branch its size sends it to.
+* All Python work is Arrow-batched ``mapInPandas``; per-row failure
   capture keeps data errors out of task retries
   (graceful degradation, ref: pypdfocr/pypdfocr_pdf.py:276-281).
 """
 
 from __future__ import annotations
 
+import base64
 import json
-import os
 import time
 from collections.abc import Iterator
 
@@ -45,7 +48,7 @@ from pyspark.sql import functions as F
 
 from . import corpus as ck
 from .config import ExtractConfig
-from .kernels import codec, hocr, htmlx
+from .kernels import codec
 from .kernels.normalize import normalize_page_text
 from .kernels.route import first_matching_folder, route_document
 from .schema import (
@@ -99,6 +102,13 @@ def build_corpus_df(spark: SparkSession, sf_dir: str, replicate: int = 1) -> Dat
 
 
 # ----------------------------------------------------------- light-path UDFs
+def _subprocess_kw(cfg: ExtractConfig) -> dict:
+    return dict(
+        gs_binary=cfg.gs_binary, tesseract_binary=cfg.tesseract_binary,
+        preprocess=cfg.preprocess, convert_binary=cfg.convert_binary,
+    )
+
+
 def _doc_kernel(payload: bytes, cfg: ExtractConfig):
     """Strategy dispatch per document: real %PDF payloads go to the
     subprocess-backed gs+tesseract kernel when the (driver-resolved)
@@ -107,11 +117,8 @@ def _doc_kernel(payload: bytes, cfg: ExtractConfig):
         from .kernels import subproc
 
         return subproc.extract_doc_subprocess(
-            payload, gs_binary=cfg.gs_binary,
-            tesseract_binary=cfg.tesseract_binary,
-            preprocess=cfg.preprocess, convert_binary=cfg.convert_binary,
-            pdfimages_binary=cfg.pdfimages_binary,
-            identify_binary=cfg.identify_binary,
+            payload, pdfimages_binary=cfg.pdfimages_binary,
+            identify_binary=cfg.identify_binary, **_subprocess_kw(cfg),
         )
     return ck.extract_doc(payload)
 
@@ -123,21 +130,20 @@ def _extract_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
         payload = bytes(payload)
         try:
             pages, status = _doc_kernel(payload, cfg)
-            text, n_pages = "\n".join(pages), len(pages)
-            norm_pages = [normalize_page_text(p) for p in pages]
-            route = route_document(
-                norm_pages, url, cfg.targets,
-                use_filename=cfg.use_filename, default=cfg.default_route,
-            )
         except Exception as exc:  # data error → row, never task failure
-            text, n_pages, status, route = "", 0, f"error:{type(exc).__name__}", cfg.default_route
+            pages, status = [], f"error:{type(exc).__name__}"
+        norm_pages = [normalize_page_text(p) for p in pages]
+        route = route_document(
+            norm_pages, url, cfg.targets,
+            use_filename=cfg.use_filename, default=cfg.default_route,
+        )
         # doc norm = per-page norms joined by space — equal to
         # normalize_page_text(text) because ascii-ignore distributes over
         # concat and the joining '\n' itself normalizes to ' ' (the same
-        # S6 identity _jvm_reassemble relies on); avoids re-normalizing
-        # the whole document text a second time (r6)
+        # S6 identity _jvm_reassemble relies on)
         out.append(
-            (url, ts, lang, text, " ".join(norm_pages), route, n_pages, status, len(payload))
+            (url, ts, lang, "\n".join(pages), " ".join(norm_pages), route, len(pages),
+             status, len(payload))
         )
     # per-row share of this batch's Python compute → lineage wall_ms
     share = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)
@@ -147,241 +153,120 @@ def _extract_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
 
 
 # ----------------------------------------------------------- heavy-path UDFs
-def _explode_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    """Split a heavy document into per-page rows — a cheap splitter only
-    (decode + per-page re-encode). The expensive work (rasterize at the
-    output dpi, hOCR, parse) happens downstream in the salted per-page
-    stage; doing it here would pin one task per multi-hundred-page doc,
-    exactly the skew the explode exists to break.
+def _real_pdf_specs(payload: bytes, cfg: ExtractConfig):
+    """Page specs of a real PDF under the subprocess strategy: stage the
+    payload once to shared scratch, probe the page count + geometry, and
+    return one slim ``pdf_path`` spec per page — each rasterized by its
+    own task via gs -dFirstPage/-dLastPage downstream. This is what breaks
+    the multi-hundred-page skew the explode exists for; the reference's
+    analog is the in-host page pool (pypdfocr_tesseract.py:138-150).
+    Page-split staging REQUIRES cfg.scratch_dir (a mount every executor
+    can reach): with an executor-local default the shuffled (path, page)
+    rows would point at files that exist on one host only and pages would
+    silently blank on a multi-host cluster — so no scratch_dir (or a probe
+    failure) means one whole-document ``pdf_b64`` spec instead.
+    Returns (specs, output dpi, height pt)."""
+    from .kernels import subproc
 
-    Payload dispatch mirrors the light path's ``corpus.extract_doc``
-    exactly: SYNPDF → page rows; HTML head → one raw pseudo-page; empty
-    SYNPDF body → an n_pages=0 carrier row; anything else → an
-    'unsupported' carrier row (n_pages=0), so the per-page stage can
-    stamp the same statuses the light path would."""
+    try:
+        if cfg.scratch_dir is None:
+            raise RuntimeError("no shared scratch configured")
+        path = subproc.stage_pdf(payload, cfg.scratch_dir)
+        n = subproc.pdf_page_count(path, pdfinfo=cfg.pdfinfo_binary)
+        geom = subproc.detect_dpi(
+            path, pdfimages=cfg.pdfimages_binary, identify=cfg.identify_binary,
+        )
+    except Exception:
+        n = None
+    if not n:
+        body = {"pdf_b64": base64.b64encode(payload).decode("ascii")}
+        return [("pdf_b64", json.dumps(body).encode())], 300, 792.0
+    specs = [
+        ("pdf_path", json.dumps(
+            {"pdf_path": path, "page": pno + 1, "greyscale": geom["greyscale"]}
+        ).encode())
+        for pno in range(n)
+    ]
+    return specs, geom["output_dpi"], geom["height_pt"]
+
+
+def _explode_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+    """Split a heavy document into one row per page spec — a cheap byte
+    splitter only (``corpus.split_doc``). The expensive work (rasterize at
+    the output dpi, hOCR, parse) happens downstream in the salted per-page
+    stage; doing it here would pin one task per multi-hundred-page doc,
+    exactly the skew the explode exists to break. A document with no
+    pages becomes one carrier row holding its split status."""
     out = []
     for url, ts, payload, lang in zip(pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]):
         payload = bytes(payload)
-        nbytes = len(payload)
-        page_lines = codec.split_pages(payload)  # byte split, no parse
-        if page_lines:
-            try:
-                # strict, like the light path's decode_doc: any non-UTF-8
-                # page line fails the WHOLE doc as decode_error (a row,
-                # never a task failure)
-                decoded = [ln.decode("utf-8") for ln in page_lines]
-            except UnicodeDecodeError:
-                out.append(
-                    (url, ts, lang, 0, 0, 792.0, 300, "\x00not-json", nbytes)
-                )
-                continue
-            try:
-                first = codec.loads_json(decoded[0])
-            except Exception:
-                first = {}
-            geom = codec.detect_geometry([first] if first else [])
-            n = len(decoded)
-            for pno, line in enumerate(decoded):
-                out.append(
-                    (url, ts, lang, pno, n, geom["height_pt"], geom["output_dpi"],
-                     line, nbytes)
-                )
-        elif page_lines is not None:
-            # valid SYNPDF with zero pages: light path yields ([], "ok")
-            out.append((url, ts, lang, 0, 0, 792.0, 300, json.dumps({"empty": True}), nbytes))
-        elif cfg.ocr_strategy == "subprocess" and payload.startswith(b"%PDF"):
-            # real PDF under the subprocess strategy: stage the payload
-            # once to shared scratch, probe the page count + geometry, and
-            # emit one slim (path, page) row per page — each rasterized by
-            # its own task via gs -dFirstPage/-dLastPage downstream. This
-            # is what breaks the multi-hundred-page skew the explode
-            # exists for; the reference's analog is the in-host page pool
-            # (pypdfocr_tesseract.py:138-150). Page-split staging REQUIRES
-            # cfg.scratch_dir (a mount every executor can reach): with an
-            # executor-local default the shuffled (path, page) rows would
-            # point at files that exist on one host only and pages would
-            # silently blank on a multi-host cluster — so no scratch_dir
-            # (or a probe failure) means the safe single-task whole-doc
-            # carrier instead.
-            from .kernels import subproc
-
-            n = None
-            try:
-                if cfg.scratch_dir is None:
-                    raise RuntimeError("no shared scratch configured")
-                path = subproc.stage_pdf(payload, cfg.scratch_dir)
-                n = subproc.pdf_page_count(path, pdfinfo=cfg.pdfinfo_binary)
-                geom = subproc.detect_dpi(
-                    path, pdfimages=cfg.pdfimages_binary,
-                    identify=cfg.identify_binary,
-                )
-            except Exception:
-                n = None
-            if n:
-                for pno in range(n):
-                    out.append(
-                        (url, ts, lang, pno, n,
-                         geom["height_pt"], geom["output_dpi"],
-                         json.dumps({"pdf_path": path, "page": pno + 1,
-                                     "greyscale": geom["greyscale"]}),
-                         nbytes)
-                    )
-            else:
-                import base64
-
-                out.append(
-                    (url, ts, lang, 0, 1, 792.0, 300,
-                     json.dumps({"pdf_b64": base64.b64encode(payload).decode("ascii")}),
-                     nbytes)
-                )
+        if cfg.ocr_strategy == "subprocess" and payload.startswith(b"%PDF"):
+            specs, dpi, height = _real_pdf_specs(payload, cfg)
+            status = "ok"
         else:
-            head = payload.lstrip()[:15].lower()
-            if head.startswith(b"<!doctype") or head.startswith(b"<html"):
-                # huge HTML doc: single raw pseudo-page, stripped downstream
-                out.append(
-                    (url, ts, lang, 0, 1, 792.0, 300,
-                     json.dumps({"raw": payload.decode("utf-8", errors="replace")}),
-                     nbytes)
-                )
-            else:
-                # light path would return ([], "unsupported")
-                out.append(
-                    (url, ts, lang, 0, 0, 792.0, 300, json.dumps({"unsupported": True}), nbytes)
-                )
+            specs, dpi, height, status = ck.split_doc(payload)
+        for pno, (kind, body) in enumerate(specs or [(None, b"")]):
+            out.append(
+                (url, ts, lang, pno, len(specs), height, dpi, kind, body, status, len(payload))
+            )
     return pd.DataFrame(out, columns=[f.name for f in PAGE_SCHEMA.fields])
 
 
+def _staged_page_text(body: bytes, dpi: int, height: float, cfg: ExtractConfig):
+    """OCR exactly one page of a staged real PDF → ([text], status)."""
+    from .kernels import subproc
+
+    page = codec.loads_json(body)
+    try:
+        return [subproc.extract_page_subprocess(
+            page["pdf_path"], int(page["page"]), dpi,
+            bool(page.get("greyscale", True)), height, **_subprocess_kw(cfg),
+        )], "ok"
+    except subproc.OcrError:
+        return [], "ocr_error"
+    except subproc.SubprocessKernelError:
+        return [], "decode_error"
+
+
 def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    """Per-page OCR kernel: rasterize the native-dpi page at the document
-    output dpi, emit+parse hOCR, reassemble text — the compute-heavy stage,
-    running on hash-spread page rows. Emits a per-page ``status`` so heavy
-    failures reach lineage (statuses mirror corpus.extract_doc: ok /
-    decode_error / html_error / unsupported / error:<Type>)."""
+    """Per-page OCR kernel on hash-spread page rows: ``corpus.page_text``
+    (or the subprocess kernels for a real PDF) plus the page's S6 norm and
+    first matching route folder, so reassembly stays in the JVM. Emits a
+    per-page ``status`` so heavy failures reach lineage."""
     t0 = time.monotonic()
     out = []
-    for url, ts, lang, pno, n, height, dpi, pjson, nbytes in zip(
+    for url, ts, lang, pno, n, height, dpi, kind, body, status, nbytes in zip(
         pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["page_no"], pdf["n_pages"],
-        pdf["height_pt"], pdf["output_dpi"], pdf["page_json"], pdf["byte_count"],
+        pdf["height_pt"], pdf["output_dpi"], pdf["page_kind"], pdf["page_json"],
+        pdf["status"], pdf["byte_count"],
     ):
-        status = "ok"
         try:
-            page = codec.loads_json(pjson)
-            if not isinstance(page, dict):
-                page = None  # parity: corpus.decode_doc → None → decode_error
-        except Exception:
-            page = None
-        if page is None:
-            status, text = "decode_error", ""
-        else:
-            try:
-                if "unsupported" in page:
-                    text, status = "", "unsupported"
-                elif "empty" in page:
-                    text = ""
-                elif "pdf_path" in page:
-                    # distributed page split of a staged real PDF: this
-                    # task rasterizes + OCRs exactly ONE page
-                    from .kernels import subproc
-
-                    try:
-                        text = subproc.extract_page_subprocess(
-                            page["pdf_path"], int(page["page"]), int(dpi),
-                            bool(page.get("greyscale", True)), float(height),
-                            gs_binary=cfg.gs_binary,
-                            tesseract_binary=cfg.tesseract_binary,
-                            preprocess=cfg.preprocess,
-                            convert_binary=cfg.convert_binary,
-                        )
-                    except subproc.OcrError:
-                        text, status = "", "ocr_error"
-                    except subproc.SubprocessKernelError:
-                        text, status = "", "decode_error"
-                elif "pdf_b64" in page:
-                    import base64
-
-                    from .kernels import subproc
-
-                    pages, status = subproc.extract_doc_subprocess(
-                        base64.b64decode(page["pdf_b64"]),
-                        gs_binary=cfg.gs_binary,
-                        tesseract_binary=cfg.tesseract_binary,
-                        preprocess=cfg.preprocess,
-                        convert_binary=cfg.convert_binary,
-                        pdfimages_binary=cfg.pdfimages_binary,
-                        identify_binary=cfg.identify_binary,
-                    )
-                    # one output row PER PAGE, so reassembly keeps page
-                    # boundaries and routes with the same per-page
-                    # early-exit the light path uses (P2) — a combined
-                    # pseudo-page would route differently for the same doc
-                    for i, ptext in enumerate(pages):
-                        pnorm = normalize_page_text(ptext)
-                        out.append(
-                            (url, ts, lang, i, len(pages), ptext, pnorm,
-                             first_matching_folder(pnorm, cfg.targets),
-                             status, int(nbytes))
-                        )
-                    if pages:
-                        continue
-                    text, n = "", 0
-                elif "raw" in page:
-                    try:
-                        text = htmlx.strip_boilerplate(page["raw"])
-                    except Exception:
-                        text, status = "", "html_error"
-                else:
-                    raster = codec.rasterize([page], int(dpi))
-                    hocr_doc = hocr.emit_hocr(raster)
-                    # r6: text-only parse (see hocr.page_texts_from_hocr);
-                    # emit_hocr of a single page always emits one
-                    # page_1 div, so index 0 is the page parse_hocr_page
-                    # would have selected by id
-                    texts = hocr.page_texts_from_hocr(hocr_doc)
-                    text = texts[0] if texts else ""
-            except Exception as exc:  # data error → row, never task failure
-                text, status = "", f"error:{type(exc).__name__}"
-        norm = normalize_page_text(text)
-        out.append(
-            (url, ts, lang, int(pno), int(n), text, norm,
-             first_matching_folder(norm, cfg.targets), status, int(nbytes))
-        )
+            if kind == "pdf_b64":
+                # one output row PER PAGE of the whole-document spec, so
+                # reassembly keeps page boundaries and routes with the
+                # light path's per-page early exit (P2)
+                payload = base64.b64decode(codec.loads_json(body)["pdf_b64"])
+                texts, status = _doc_kernel(payload, cfg)
+                pno, n = 0, len(texts)
+            elif kind == "pdf_path":
+                texts, status = _staged_page_text(body, int(dpi), float(height), cfg)
+            elif kind is not None:
+                text, status = ck.page_text((kind, body), int(dpi))
+                texts = [text]
+            else:
+                texts = []  # zero-page carrier: keeps its split status
+        except Exception as exc:  # data error → row, never task failure
+            texts, status = [], f"error:{type(exc).__name__}"
+        for i, text in enumerate(texts or [""]):
+            norm = normalize_page_text(text)
+            out.append(
+                (url, ts, lang, int(pno) + i, int(n), text, norm,
+                 first_matching_folder(norm, cfg.targets), status, int(nbytes))
+            )
     share = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)
     res = pd.DataFrame(out, columns=[f.name for f in PAGE_TEXT_SCHEMA.fields][:-1])
     res["wall_ms"] = share
     return res
-
-
-def _make_reassemble(cfg: ExtractConfig):
-    cols = [f.name for f in EXTRACTED_SCHEMA.fields]
-
-    def reassemble(pdf):
-        pdf = pdf.sort_values("page_no")
-        url = pdf["url"].iloc[0]
-        # doc status = first non-ok page status in page order (light-path
-        # parity: a failed doc surfaces in lineage failure accounting)
-        status = next((s for s in pdf["status"] if s != "ok"), "ok")
-        if status == "ok":
-            n_pages = int(pdf["n_pages"].iloc[0])
-            page_texts = (
-                ["" if t is None else t for t in pdf["page_text"]] if n_pages else []
-            )
-            text = "\n".join(page_texts)
-        else:
-            # light-path parity: a failed doc is (text="", n_pages=0)
-            n_pages, page_texts, text = 0, [], ""
-        norm_pages = [normalize_page_text(p) for p in page_texts]
-        route = route_document(
-            norm_pages, url, cfg.targets,
-            use_filename=cfg.use_filename, default=cfg.default_route,
-        )
-        return pd.DataFrame(
-            [(url, pdf["warc_ts"].iloc[0], pdf["lang"].iloc[0], text,
-              normalize_page_text(text), route, n_pages, status,
-              int(pdf["byte_count"].iloc[0]), float(pdf["wall_ms"].sum()))],
-            columns=cols,
-        )
-
-    return reassemble
 
 
 def _filename_route_expr(url_col, targets):
@@ -401,16 +286,16 @@ def _filename_route_expr(url_col, targets):
 
 
 def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """Document reassembly as pure JVM aggregation — the default since
-    round 4. The per-page Python stage already produced ``norm_text`` and
+    """Heavy-branch document reassembly as pure JVM aggregation. The
+    per-page Python stage already produced ``norm_text`` and
     ``route_match``; rebuilding the document is then collect_list +
     array_sort + array_join and an ordered route reduction, all inside
-    whole-stage codegen. vs the former ``applyInPandas`` reassembly this
-    removes one Python stage (and its Arrow round trip of every heavy
-    document's full text) from the hot path; semantics are pinned
-    row-identical by tests/test_pipeline.py::test_jvm_reassembly_parity.
+    whole-stage codegen — no Python stage and no second Arrow round trip
+    of every heavy document's text.
 
-    Semantics mirrored from the Python ``_make_reassemble`` exactly:
+    The result equals ``corpus.oracle_extract`` (the light branch's
+    ``corpus.extract_doc``), pinned row for row on either branch by
+    tests/test_pipeline.py::test_branch_independence:
 
     * doc status = first non-ok page status in page order, via
       ``min(struct(page_no, status))`` over non-ok rows;
@@ -423,8 +308,11 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     * route = first page (by page_no) with a match → its folder, else
       filename fallback (when enabled), else the default.
     """
+    # span-level page rows (spans.extract_spans) also carry each page's lines
+    spans = "lines" in pages_df.columns
+    page_cols = ["page_no", "n_pages", "page_text", "norm_text", "route_match"]
     struct_sorted = F.array_sort(
-        F.collect_list(F.struct("page_no", "n_pages", "page_text", "norm_text", "route_match"))
+        F.collect_list(F.struct(*page_cols, *(["lines"] if spans else [])))
     )
     g = pages_df.groupBy("url").agg(
         struct_sorted.alias("_p"),
@@ -444,7 +332,8 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     if cfg.use_filename:
         route = F.coalesce(route, _filename_route_expr(F.col("url"), cfg.targets))
     route = F.coalesce(route, F.lit(cfg.default_route).cast("string"))
-    return g.select(
+    n_pages = F.when(ok, F.get("_p", 0)["n_pages"]).otherwise(F.lit(0)).cast("int")
+    cols = [
         F.col("url"),
         F.col("warc_ts"),
         F.col("lang"),
@@ -453,11 +342,18 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
         F.when(ok, F.array_join(F.transform("_p", lambda x: x["norm_text"]), " ", ""))
         .otherwise("").alias("extracted_norm"),
         route.alias("route"),
-        F.when(ok, F.get("_p", 0)["n_pages"]).otherwise(F.lit(0)).cast("int").alias("n_pages"),
+        n_pages.alias("n_pages"),
         F.when(ok, F.lit("ok")).otherwise(F.col("_bad")["status"]).alias("status"),
         F.col("byte_count"),
         F.col("wall_ms"),
-    )
+    ]
+    if spans:
+        # a zero-page or failed document has no spans (n_pages = 0)
+        cols.append(F.transform(
+            F.slice("_p", 1, n_pages),
+            lambda x: F.struct(x["page_no"].alias("page_no"), x["lines"].alias("lines")),
+        ).alias("spans"))
+    return g.select(*cols)
 
 
 # ------------------------------------------------------------------ pipeline
@@ -483,54 +379,57 @@ def extract(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame
     from . import envcheck
 
     cfg = replace(cfg, ocr_strategy=envcheck.resolve_ocr_strategy(cfg.ocr_strategy))
-    spark = corpus_df.sparkSession
-    src = source_filter(corpus_df)
+    light, heavy = split_branches(corpus_df, cfg)
+    light_out = light.mapInPandas(
+        lambda it: (_extract_rows(pdf, cfg) for pdf in it), EXTRACTED_SCHEMA
+    )
+    pages = salted_pages(heavy, cfg).mapInPandas(
+        lambda it: (_page_text_rows(pdf, cfg) for pdf in it), PAGE_TEXT_SCHEMA
+    )
+    return light_out.unionByName(_jvm_reassemble(pages, cfg))
 
-    # prefer the stats-bearing n_bytes column: `n_bytes > T` prunes at the
-    # parquet/Iceberg row-group level (min/max stats), so each branch's
-    # scan skips the other branch's row groups. A coalesce() wrapper
-    # would defeat pushdown, so the bare column is compared and rows with
-    # a null n_bytes fall to the light branch (Or(IsNull, LtEq) pushes).
+
+def split_branches(corpus_df: DataFrame, cfg: ExtractConfig) -> tuple[DataFrame, DataFrame]:
+    """Source filter, then the light/heavy split by payload size →
+    (light rows, heavy rows).
+
+    Prefer the stats-bearing n_bytes column: `n_bytes > T` prunes at the
+    parquet/Iceberg row-group level (min/max stats), so each branch's
+    scan skips the other branch's row groups. A coalesce() wrapper would
+    defeat pushdown, so the bare column is compared and rows with a null
+    n_bytes fall to the light branch (Or(IsNull, LtEq) pushes)."""
+    src = source_filter(corpus_df)
     if "n_bytes" in corpus_df.columns:
         light = src.where(
             F.col("n_bytes").isNull() | (F.col("n_bytes") <= cfg.heavy_payload_bytes)
         )
-        heavy = src.where(F.col("n_bytes") > cfg.heavy_payload_bytes)
-    else:
-        is_heavy = F.length(F.col("html")) > cfg.heavy_payload_bytes
-        light = src.where(~is_heavy)
-        heavy = src.where(is_heavy)
+        return light, src.where(F.col("n_bytes") > cfg.heavy_payload_bytes)
+    is_heavy = F.length(F.col("html")) > cfg.heavy_payload_bytes
+    return src.where(~is_heavy), src.where(is_heavy)
 
-    light_out = light.mapInPandas(
-        lambda it: (_extract_rows(pdf, cfg) for pdf in it), EXTRACTED_SCHEMA
-    )
 
-    # After the salt, page rows are uniform-cost (one page each), so the
-    # right partition count is the cluster's parallelism — not a multiple:
-    # every extra partition is one more Python-worker dispatch, and the
-    # r4 sweep measured 4× parallelism costing ~2× the whole stage in
-    # tiny-task overhead (32→128 partitions: 1.04s→2.7s on 7.9k pages).
-    # Page-count skew is already broken by the per-page salt itself;
-    # clusters with heterogeneous page cost can raise cfg.page_partitions.
-    k = cfg.page_partitions or spark.sparkContext.defaultParallelism
-    heavy_out = (
-        # Explode IN PLACE at the scan — no pre-spread shuffle. The
-        # explode is a byte split (no parse, ~2 ms/doc), so input-file
-        # clustering of heavy docs costs microseconds per task, while the
-        # pre-repartition it replaced shuffled every heavy document's
-        # RAW payload a second time (the salt exchange right after this
-        # ships the same bytes page-split — once is enough).
-        heavy.mapInPandas(lambda it: (_explode_rows(pdf, cfg) for pdf in it), PAGE_SCHEMA)
-        .repartition(k, F.xxhash64("url", "page_no"))
-        .mapInPandas(lambda it: (_page_text_rows(pdf, cfg) for pdf in it), PAGE_TEXT_SCHEMA)
-    )
-    if cfg.python_reassembly:
-        heavy_out = heavy_out.groupBy("url").applyInPandas(
-            _make_reassemble(cfg), EXTRACTED_SCHEMA
-        )
-    else:
-        heavy_out = _jvm_reassemble(heavy_out, cfg)
-    return light_out.unionByName(heavy_out)
+def salted_pages(heavy: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """Heavy rows → PAGE_SCHEMA rows hash-spread by (url, page_no).
+
+    Explode IN PLACE at the scan — no pre-spread shuffle. The explode is
+    a byte split (no parse, ~2 ms/doc), so input-file clustering of heavy
+    docs costs microseconds per task, while a pre-repartition would
+    shuffle every heavy document's RAW payload a second time (the salt
+    exchange right after this ships the same bytes page-split — once is
+    enough).
+
+    After the salt, page rows are uniform-cost (one page each), so the
+    right partition count is the cluster's parallelism — not a multiple:
+    every extra partition is one more Python-worker dispatch, and the r4
+    sweep measured 4× parallelism costing ~2× the whole stage in
+    tiny-task overhead (32→128 partitions: 1.04s→2.7s on 7.9k pages).
+    Page-count skew is already broken by the per-page salt itself;
+    clusters with heterogeneous page cost can raise cfg.page_partitions.
+    """
+    k = cfg.page_partitions or heavy.sparkSession.sparkContext.defaultParallelism
+    return heavy.mapInPandas(
+        lambda it: (_explode_rows(pdf, cfg) for pdf in it), PAGE_SCHEMA
+    ).repartition(k, F.xxhash64("url", "page_no"))
 
 
 def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
@@ -551,9 +450,9 @@ def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame
     and NEITHER branch's pushed filter could skip anything — both
     branches scanned (and Arrow-shipped) the full corpus. Now the light
     branch's ``n_bytes <= T`` prunes every heavy file at file level and
-    vice versa. Heavy rows get ~par/8 files (they are few but fat — at
-    sf1.0, 1% of docs carry ~60% of bytes), light rows the rest.
-    Iceberg mapping: a size-class partition / z-order at ingest.
+    vice versa. Each class gets ``par`` files (defaultParallelism):
+    heavy docs are few but fat (at sf1.0, 1% of docs carry ~60% of
+    bytes). Iceberg mapping: a size-class partition / z-order at ingest.
     """
     from .config import HEAVY_PAYLOAD_BYTES
 

@@ -82,7 +82,8 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-# Per-page intermediate rows on the heavy (exploded) path.
+# Per-page intermediate rows on the heavy (exploded) path: one row per
+# page spec of corpus.split_doc, or per page of a staged real PDF.
 PAGE_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -92,7 +93,13 @@ PAGE_SCHEMA = StructType(
         StructField("n_pages", IntegerType(), False),
         StructField("height_pt", DoubleType(), False),
         StructField("output_dpi", IntegerType(), False),
-        StructField("page_json", StringType(), False),
+        # page spec (kind, body): corpus.PDF_PAGE / HTML_PAGE, or the
+        # subprocess strategy's "pdf_path" / "pdf_b64" with a JSON body.
+        # A document with no pages is one carrier row: page_kind null,
+        # n_pages 0 and the split status in ``status``.
+        StructField("page_kind", StringType(), True),
+        StructField("page_json", BinaryType(), False),
+        StructField("status", StringType(), False),
         StructField("byte_count", LongType(), True),
     ]
 )

@@ -7,6 +7,7 @@ assert the extracted text — here byte-identical per url, which is
 strictly stronger than the reference's keyword-tolerant check.
 """
 
+import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -92,47 +93,152 @@ def test_resume_noop_without_snapshot(spark, tmp_path):
     assert lineage.resume_filter(corpus_df, str(tmp_path / "nope")).count() == 400
 
 
-def test_jvm_reassembly_parity(spark):
-    """The JVM heavy-path reassembly (default) must be row-identical to
-    the original applyInPandas reassembly — over the real corpus (heavy
-    tail included) AND the failure fixtures (decode_error, unsupported,
-    mixed-page statuses), with wall_ms excluded (a timing column)."""
-    import dataclasses
+def test_resume_raises_on_unreadable_snapshot(spark, tmp_path):
+    """A committed extracted/ table whose part files are truncated is not
+    "nothing committed": resume raises instead of re-running and
+    re-appending the corpus, and the committed table is left as it was."""
+    import os
+
+    cfg = ExtractConfig()
+    corpus_df = pipeline.source_filter(pipeline.build_corpus_df(spark, SF_SMOKE))
+    out = str(tmp_path)
+    lineage.commit(pipeline.extract(corpus_df.limit(20), cfg), out, run_id="r1")
+    table = f"{out}/extracted"
+    parts = [f for f in os.listdir(table) if f.endswith(".parquet")]
+    for f in parts:
+        with open(f"{table}/{f}", "r+b") as fh:
+            fh.truncate(os.path.getsize(f"{table}/{f}") // 2)
+    before = {d: sorted(os.listdir(f"{out}/{d}")) for d in ("extracted", "lineage")}
+    with pytest.raises(Exception):
+        remaining = lineage.resume_filter(corpus_df, out)
+        lineage.commit(pipeline.extract(remaining, cfg), out, run_id="r2")
+    assert {d: sorted(os.listdir(f"{out}/{d}")) for d in before} == before
+
+
+def test_branch_independence(spark):
+    """A document's output does not depend on which branch its size sends
+    it to: with every doc on the heavy branch (heavy_payload_bytes=0) and
+    with the default split, ``extract`` equals ``corpus.oracle_extract``
+    row for row — over the real corpus (heavy tail included) and the
+    failure fixtures (decode_error, unsupported, a late page route, the
+    filename fallback, and a page whose hOCR does not parse)."""
     import datetime
 
     from pypdfocr_spark.kernels import codec
     from pypdfocr_spark.schema import CORPUS_SCHEMA
 
-    ts = datetime.datetime(2024, 1, 1)
     pad = 300_000
-    good_page = {"dpi": 300, "w_px": 2550, "h_px": 3300,
-                 "words": [{"t": "spark window", "b": [10, 10, 80, 40], "l": 0}]}
-    plain_page = {"dpi": 300, "w_px": 2550, "h_px": 3300,
-                  "words": [{"t": "nothing-here", "b": [10, 10, 80, 40], "l": 0}]}
+
+    def page(word):
+        return {"dpi": 300, "w_px": 2550, "h_px": 3300,
+                "words": [{"t": word, "b": [10, 10, 80, 40], "l": 0}]}
+
+    good_page, plain_page = page("spark window"), page("nothing-here")
     fixtures = [
-        ("https://a.example/corrupt.pdf", ts,
-         codec.MAGIC + b'{"dpi":300,"words":[]}\n{garbage' + b"x" * pad, "", "en"),
-        ("https://a.example/blob.bin", ts, b"\x00\x01" + b"y" * pad, "", "en"),
+        ("https://a.example/corrupt.pdf",
+         codec.MAGIC + b'{"dpi":300,"words":[]}\n{garbage' + b"x" * pad),
+        ("https://a.example/blob.bin", b"\x00\x01" + b"y" * pad),
         # routed via a page match on a late page (page-order reduction)
-        ("https://a.example/late-route.pdf", ts,
-         codec.encode_doc([plain_page] * 200 + [good_page]), "", "en"),
+        ("https://a.example/late-route.pdf",
+         codec.encode_doc([plain_page] * 200 + [good_page])),
         # no page match → filename fallback ('table' ∈ targets['storage'])
-        ("https://a.example/table-report.pdf", ts,
-         codec.encode_doc([plain_page] * 200), "", "en"),
+        ("https://a.example/table-report.pdf", codec.encode_doc([plain_page] * 200)),
+        # the middle page's hOCR is not XML (a control character): that
+        # page adds no text and the rest of the document goes on
+        ("https://a.example/bad-xml-char.pdf",
+         codec.encode_doc([plain_page, page("x\u0001y"), good_page])),
     ]
-    fixture_df = spark.createDataFrame(
-        [(u, t, p, x, l, len(p)) for (u, t, p, x, l) in fixtures], CORPUS_SCHEMA
+    tbl = pq.read_table(f"{SF_SMOKE}/documents.parquet").to_pylist()
+    rows = [{"url": u, "html": p} for u, p in fixtures] + [
+        ck.build_corpus_row(r["doc_id"], r["text"], r["lang"], r["source"]) for r in tbl
+    ]
+    cols = ["url", "extracted_text", "extracted_norm", "route", "n_pages", "status"]
+    want = sorted(
+        tuple(o[c] for c in cols)
+        for o in ck.oracle_extract(rows, DEFAULT_TARGETS, DEFAULT_ROUTE)
     )
-    corpus_df = pipeline.build_corpus_df(spark, SF_SMOKE).unionByName(fixture_df)
-    cfg_jvm = ExtractConfig()
-    cfg_py = dataclasses.replace(cfg_jvm, python_reassembly=True)
-    cols = [c for c in pipeline.extract(corpus_df, cfg_jvm).columns if c != "wall_ms"]
-    got_jvm = sorted(map(tuple, pipeline.extract(corpus_df, cfg_jvm).select(cols).collect()))
-    got_py = sorted(map(tuple, pipeline.extract(corpus_df, cfg_py).select(cols).collect()))
-    assert got_jvm == got_py
-    by_url = {r[0]: r for r in got_jvm}
-    assert by_url["https://a.example/late-route.pdf"][cols.index("route")] == "spark_docs"
-    assert by_url["https://a.example/table-report.pdf"][cols.index("route")] == "storage"
+    ts = datetime.datetime(2024, 1, 1)
+    corpus_df = spark.createDataFrame(
+        [(r["url"], ts, r["html"], "", "en", len(r["html"])) for r in rows], CORPUS_SCHEMA
+    )
+    for cfg in (ExtractConfig(heavy_payload_bytes=0), ExtractConfig()):
+        got = sorted(map(tuple, pipeline.extract(corpus_df, cfg).select(cols).collect()))
+        assert got == want, cfg.heavy_payload_bytes
+    by_url = {r[0]: dict(zip(cols, r)) for r in want}
+    assert by_url["https://a.example/late-route.pdf"]["route"] == "spark_docs"
+    assert by_url["https://a.example/table-report.pdf"]["route"] == "storage"
+    assert by_url["https://a.example/corrupt.pdf"]["status"] == "decode_error"
+    bad_xml = by_url["https://a.example/bad-xml-char.pdf"]
+    assert (bad_xml["n_pages"], bad_xml["status"], bad_xml["route"]) == (3, "ok", "spark_docs")
+    assert bad_xml["extracted_text"] == "nothing-here\n\nspark window"
+
+
+def _raise_on_call(real, bad_call):
+    calls = []
+
+    def kernel(*args, **kw):
+        calls.append(1)
+        if len(calls) == bad_call:
+            raise RuntimeError("injected")
+        return real(*args, **kw)
+
+    return kernel
+
+
+@pytest.mark.parametrize("bad_call", [1, 2])
+def test_extract_rows_kernel_error_is_a_row(monkeypatch, bad_call):
+    """A light-branch kernel that raises on the first or a middle row of a
+    batch yields an error row with no text; its neighbours are unchanged
+    and the task does not fail."""
+    rows = [
+        ck.build_corpus_row(d, "spark column window row data", "en", "s") for d in (1, 2, 4)
+    ]
+    pdf = pd.DataFrame(rows)
+    cfg = ExtractConfig()
+    want = pipeline._extract_rows(pdf, cfg)
+    monkeypatch.setattr(pipeline, "_doc_kernel", _raise_on_call(pipeline._doc_kernel, bad_call))
+    got = pipeline._extract_rows(pdf, cfg)
+    bad = got.iloc[bad_call - 1]
+    assert (bad["extracted_text"], bad["extracted_norm"]) == ("", "")
+    assert (bad["n_pages"], bad["status"]) == (0, "error:RuntimeError")
+    cols = ["url", "extracted_text", "extracted_norm", "route", "n_pages", "status"]
+    keep = [i for i in range(len(rows)) if i != bad_call - 1]
+    assert got[cols].iloc[keep].values.tolist() == want[cols].iloc[keep].values.tolist()
+
+
+@pytest.mark.parametrize("bad_call", [1, 2])
+def test_page_text_rows_kernel_error_is_a_row(spark, monkeypatch, bad_call):
+    """The heavy-branch page kernel raising on the first or a middle page
+    row yields an error page row; after JVM reassembly its document reads
+    (extracted_norm='', n_pages=0, status='error:<Type>') and the other
+    documents are unchanged."""
+    from pypdfocr_spark.schema import PAGE_TEXT_SCHEMA
+
+    rows = [
+        ck.build_corpus_row(d, "spark column window row data", "en", "s") for d in (1, 2, 4)
+    ]
+    cfg = ExtractConfig()
+    pages = pipeline._explode_rows(pd.DataFrame(rows), cfg)
+    assert len(pages) == 3
+
+    def docs(page_rows):
+        df = spark.createDataFrame(page_rows, PAGE_TEXT_SCHEMA)
+        out = pipeline._jvm_reassemble(df, cfg).drop("wall_ms", "warc_ts").collect()
+        return {r["url"]: r.asDict() for r in out}
+
+    want = docs(pipeline._page_text_rows(pages, cfg))
+    monkeypatch.setattr(ck, "page_text", _raise_on_call(ck.page_text, bad_call))
+    got_pages = pipeline._page_text_rows(pages, cfg)
+    bad_page = got_pages.iloc[bad_call - 1]
+    assert (bad_page["page_text"], bad_page["norm_text"]) == ("", "")
+    assert bad_page["status"] == "error:RuntimeError"
+    got = docs(got_pages)
+    bad_url = pages["url"].iloc[bad_call - 1]
+    assert got[bad_url]["extracted_norm"] == "" and got[bad_url]["extracted_text"] == ""
+    assert (got[bad_url]["n_pages"], got[bad_url]["status"]) == (0, "error:RuntimeError")
+    assert {u: r for u, r in got.items() if u != bad_url} == {
+        u: r for u, r in want.items() if u != bad_url
+    }
 
 
 def test_heavy_path_failures_reach_status_and_lineage(spark):
