@@ -39,9 +39,10 @@ def new_run_id() -> str:
 def lineage_rows(extracted: DataFrame, run_id: str, wall_ms: int = 0) -> DataFrame:
     """Per-partition metrics over the extraction output.
 
-    ``wall_ms`` per partition is the sum of the per-row Python compute
-    shares measured inside the Arrow stages (EXTRACTED_SCHEMA.wall_ms);
-    the caller's job-level wall is the fallback when the column is absent.
+    ``wall_ms`` per partition is the sum of the per-document Python
+    compute times measured inside the Arrow stages
+    (EXTRACTED_SCHEMA.wall_ms); the caller's job-level wall is the
+    fallback when the column is absent.
     """
     wall_col = (
         F.round(F.coalesce(F.sum("row_wall_ms"), F.lit(float(wall_ms)))).cast("long")
@@ -86,11 +87,15 @@ def commit(extracted: DataFrame, out_dir: str, run_id: str | None = None) -> dic
 
     run_id = run_id or new_run_id()
     extracted = extracted.persist()  # one computation feeds both writes
-    t0 = time.monotonic()
-    catalog.append(extracted, f"{out_dir}/extracted")
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    catalog.append(lineage_rows(extracted, run_id, wall_ms), f"{out_dir}/lineage")
-    extracted.unpersist()
+    try:
+        t0 = time.monotonic()
+        catalog.append(extracted, f"{out_dir}/extracted")
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        catalog.append(lineage_rows(extracted, run_id, wall_ms), f"{out_dir}/lineage")
+    finally:
+        # a failed write (e.g. one --watch micro-batch) must not leave the
+        # cached DataFrame behind
+        extracted.unpersist()
     return {"run_id": run_id, "wall_ms": wall_ms}
 
 

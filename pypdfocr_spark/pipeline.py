@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import base64
 import json
+import os
 import time
 from collections.abc import Iterator
 
@@ -57,8 +58,16 @@ from .schema import (
     PAGE_SCHEMA,
     PAGE_TEXT_SCHEMA,
 )
+from .session import per_batch
 
 EXCLUDED_SUFFIXES = ck.EXCLUDED_SUFFIXES
+
+# Layout tag materialize_corpus writes next to the data, after it: a
+# cached corpus directory without this exact tag (a partial write, or one
+# written in another layout) is rebuilt by load_corpus. Change it whenever
+# materialize_corpus or the corpus payload bytes change.
+CORPUS_LAYOUT = "size-class-files/1"
+_LAYOUT = "_LAYOUT"
 
 
 # --------------------------------------------------------------- corpus build
@@ -124,9 +133,9 @@ def _doc_kernel(payload: bytes, cfg: ExtractConfig):
 
 
 def _extract_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    t0 = time.monotonic()
     out = []
     for url, ts, payload, lang in zip(pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]):
+        t0 = time.monotonic()
         payload = bytes(payload)
         try:
             pages, status = _doc_kernel(payload, cfg)
@@ -143,13 +152,9 @@ def _extract_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
         # S6 identity _jvm_reassemble relies on)
         out.append(
             (url, ts, lang, "\n".join(pages), " ".join(norm_pages), route, len(pages),
-             status, len(payload))
+             status, len(payload), (time.monotonic() - t0) * 1000.0)
         )
-    # per-row share of this batch's Python compute → lineage wall_ms
-    share = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)
-    res = pd.DataFrame(out, columns=[f.name for f in EXTRACTED_SCHEMA.fields][:-1])
-    res["wall_ms"] = share
-    return res
+    return pd.DataFrame(out, columns=EXTRACTED_SCHEMA.names)
 
 
 # ----------------------------------------------------------- heavy-path UDFs
@@ -233,13 +238,13 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     (or the subprocess kernels for a real PDF) plus the page's S6 norm and
     first matching route folder, so reassembly stays in the JVM. Emits a
     per-page ``status`` so heavy failures reach lineage."""
-    t0 = time.monotonic()
     out = []
     for url, ts, lang, pno, n, height, dpi, kind, body, status, nbytes in zip(
         pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["page_no"], pdf["n_pages"],
         pdf["height_pt"], pdf["output_dpi"], pdf["page_kind"], pdf["page_json"],
         pdf["status"], pdf["byte_count"],
     ):
+        t0 = time.monotonic()
         try:
             if kind == "pdf_b64":
                 # one output row PER PAGE of the whole-document spec, so
@@ -257,16 +262,17 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                 texts = []  # zero-page carrier: keeps its split status
         except Exception as exc:  # data error → row, never task failure
             texts, status = [], f"error:{type(exc).__name__}"
+        rows = []
         for i, text in enumerate(texts or [""]):
             norm = normalize_page_text(text)
-            out.append(
-                (url, ts, lang, int(pno) + i, int(n), text, norm,
-                 first_matching_folder(norm, cfg.targets), status, int(nbytes))
+            rows.append(
+                [url, ts, lang, int(pno) + i, int(n), text, norm,
+                 first_matching_folder(norm, cfg.targets), status, int(nbytes)]
             )
-    share = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)
-    res = pd.DataFrame(out, columns=[f.name for f in PAGE_TEXT_SCHEMA.fields][:-1])
-    res["wall_ms"] = share
-    return res
+        # this spec's time, split evenly over the pages it yielded
+        share = (time.monotonic() - t0) * 1000.0 / len(rows)
+        out.extend(row + [share] for row in rows)
+    return pd.DataFrame(out, columns=PAGE_TEXT_SCHEMA.names)
 
 
 def _filename_route_expr(url_col, targets):
@@ -380,11 +386,9 @@ def extract(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame
 
     cfg = replace(cfg, ocr_strategy=envcheck.resolve_ocr_strategy(cfg.ocr_strategy))
     light, heavy = split_branches(corpus_df, cfg)
-    light_out = light.mapInPandas(
-        lambda it: (_extract_rows(pdf, cfg) for pdf in it), EXTRACTED_SCHEMA
-    )
+    light_out = light.mapInPandas(per_batch(_extract_rows, cfg), EXTRACTED_SCHEMA)
     pages = salted_pages(heavy, cfg).mapInPandas(
-        lambda it: (_page_text_rows(pdf, cfg) for pdf in it), PAGE_TEXT_SCHEMA
+        per_batch(_page_text_rows, cfg), PAGE_TEXT_SCHEMA
     )
     return light_out.unionByName(_jvm_reassemble(pages, cfg))
 
@@ -427,9 +431,9 @@ def salted_pages(heavy: DataFrame, cfg: ExtractConfig) -> DataFrame:
     clusters with heterogeneous page cost can raise cfg.page_partitions.
     """
     k = cfg.page_partitions or heavy.sparkSession.sparkContext.defaultParallelism
-    return heavy.mapInPandas(
-        lambda it: (_explode_rows(pdf, cfg) for pdf in it), PAGE_SCHEMA
-    ).repartition(k, F.xxhash64("url", "page_no"))
+    return heavy.mapInPandas(per_batch(_explode_rows, cfg), PAGE_SCHEMA).repartition(
+        k, F.xxhash64("url", "page_no")
+    )
 
 
 def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
@@ -472,7 +476,21 @@ def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame
         "append"
     ).parquet(path)
     df.unpersist()
+    with open(os.path.join(path, _LAYOUT), "w") as f:
+        f.write(CORPUS_LAYOUT)
     return spark.read.parquet(path)
+
+
+def load_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    """The corpus materialized at ``path``, rebuilt from ``sf_dir`` first
+    when its layout tag is missing or differs from CORPUS_LAYOUT."""
+    try:
+        with open(os.path.join(path, _LAYOUT)) as f:
+            if f.read() == CORPUS_LAYOUT:
+                return spark.read.parquet(path)
+    except OSError:
+        pass
+    return materialize_corpus(spark, sf_dir, path)
 
 
 def extract_from_documents(
@@ -484,14 +502,9 @@ def extract_from_documents(
     """Convenience: driver documents table → corpus → extraction.
 
     With ``corpus_path`` the corpus is materialized (or reused if already
-    written) and extraction scans it like the production table.
+    written in the current layout, ``load_corpus``) and extraction scans
+    it like the production table.
     """
     if corpus_path is None:
         return extract(build_corpus_df(spark, sf_dir), cfg)
-    try:
-        corpus_df = spark.read.parquet(corpus_path)
-        if not corpus_df.head(1):  # plan-level probe, no RDD conversion
-            raise ValueError("empty corpus")
-    except Exception:
-        corpus_df = materialize_corpus(spark, sf_dir, corpus_path)
-    return extract(corpus_df, cfg)
+    return extract(load_corpus(spark, sf_dir, corpus_path), cfg)

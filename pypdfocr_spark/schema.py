@@ -76,8 +76,10 @@ EXTRACTED_SCHEMA = StructType(
         StructField("n_pages", IntegerType(), True),
         StructField("status", StringType(), True),
         StructField("byte_count", LongType(), True),
-        # per-row share of the Arrow batch's Python compute time; summed
-        # per physical partition into the lineage wall_ms metric
+        # Python compute ms of this document: its kernel call (light
+        # branch) or the sum of its page-kernel calls (heavy branch; a spec
+        # yielding several pages splits its time evenly). Summed per
+        # physical partition into the lineage wall_ms metric.
         StructField("wall_ms", DoubleType(), True),
     ]
 )

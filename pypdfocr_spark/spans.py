@@ -33,6 +33,7 @@ from .kernels.normalize import normalize_page_text
 from .kernels.route import first_matching_folder, route_document
 from .pipeline import _jvm_reassemble, salted_pages, split_branches
 from .schema import EXTRACTED_SCHEMA, LINE_SCHEMA, PAGE_TEXT_SCHEMA
+from .session import per_batch
 
 PAGE_SPANS_FIELD = StructField(
     "spans",
@@ -53,9 +54,9 @@ PAGE_TEXT_SPANS_SCHEMA = StructType(
 
 
 def _doc_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    t0 = time.monotonic()
     out = []
     for url, ts, payload, lang in zip(pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]):
+        t0 = time.monotonic()
         payload = bytes(payload)
         try:
             spans_by_page, status = ck.extract_doc_spans(payload)
@@ -70,21 +71,19 @@ def _doc_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
         spans = [{"page_no": i, "lines": lines} for i, lines in enumerate(spans_by_page)]
         out.append(
             (url, ts, lang, text, normalize_page_text(text), route,
-             len(page_texts), status, len(payload), 0.0, spans)
+             len(page_texts), status, len(payload), (time.monotonic() - t0) * 1000.0, spans)
         )
-    res = pd.DataFrame(out, columns=[f.name for f in EXTRACTED_SPANS_SCHEMA.fields])
-    res["wall_ms"] = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)
-    return res
+    return pd.DataFrame(out, columns=EXTRACTED_SPANS_SCHEMA.names)
 
 
 def _page_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    t0 = time.monotonic()
     out = []
     for url, ts, lang, pno, n, height, dpi, kind, body, status, nbytes in zip(
         pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["page_no"], pdf["n_pages"],
         pdf["height_pt"], pdf["output_dpi"], pdf["page_kind"], pdf["page_json"],
         pdf["status"], pdf["byte_count"],
     ):
+        t0 = time.monotonic()
         lines = []  # a zero-page carrier keeps its split status
         if kind is not None:
             lines, status = ck.page_spans((kind, body), int(dpi), float(height))
@@ -92,13 +91,10 @@ def _page_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame
         norm = normalize_page_text(text)
         out.append(
             (url, ts, lang, int(pno), int(n), text, norm,
-             first_matching_folder(norm, cfg.targets), status, int(nbytes), lines)
+             first_matching_folder(norm, cfg.targets), status, int(nbytes),
+             (time.monotonic() - t0) * 1000.0, lines)
         )
-    res = pd.DataFrame(
-        out, columns=[f.name for f in PAGE_TEXT_SCHEMA.fields][:-1] + ["lines"]
-    )
-    res["wall_ms"] = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)
-    return res
+    return pd.DataFrame(out, columns=PAGE_TEXT_SPANS_SCHEMA.names)
 
 
 def extract_spans(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame:
@@ -114,9 +110,9 @@ def extract_spans(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> Dat
     cfg = replace(cfg or ExtractConfig(), ocr_strategy="builtin")
     light, heavy = split_branches(corpus_df, cfg)
     light_out = light.mapInPandas(
-        lambda it: (_doc_rows_with_spans(pdf, cfg) for pdf in it), EXTRACTED_SPANS_SCHEMA
+        per_batch(_doc_rows_with_spans, cfg), EXTRACTED_SPANS_SCHEMA
     )
     pages = salted_pages(heavy, cfg).mapInPandas(
-        lambda it: (_page_rows_with_spans(pdf, cfg) for pdf in it), PAGE_TEXT_SPANS_SCHEMA
+        per_batch(_page_rows_with_spans, cfg), PAGE_TEXT_SPANS_SCHEMA
     )
     return light_out.unionByName(_jvm_reassemble(pages, cfg))

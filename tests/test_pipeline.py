@@ -7,6 +7,10 @@ assert the extracted text — here byte-identical per url, which is
 strictly stronger than the reference's keyword-tolerant check.
 """
 
+import glob
+import os
+import time
+
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
@@ -14,7 +18,12 @@ from pyspark.sql import functions as F
 
 from pypdfocr_spark import corpus as ck
 from pypdfocr_spark import lineage, pipeline
-from pypdfocr_spark.config import DEFAULT_ROUTE, DEFAULT_TARGETS, ExtractConfig
+from pypdfocr_spark.config import (
+    DEFAULT_ROUTE,
+    DEFAULT_TARGETS,
+    HEAVY_PAYLOAD_BYTES,
+    ExtractConfig,
+)
 
 from tests.conftest import SF_SMOKE
 
@@ -97,7 +106,6 @@ def test_resume_raises_on_unreadable_snapshot(spark, tmp_path):
     """A committed extracted/ table whose part files are truncated is not
     "nothing committed": resume raises instead of re-running and
     re-appending the corpus, and the committed table is left as it was."""
-    import os
 
     cfg = ExtractConfig()
     corpus_df = pipeline.source_filter(pipeline.build_corpus_df(spark, SF_SMOKE))
@@ -293,19 +301,89 @@ def test_materialize_corpus_size_class_file_layout(spark, tmp_path):
     file's n_bytes range sits entirely on one side of the threshold, so
     the branches' pushed filters prune at file level), and the reader
     returns exactly the same row set as the direct corpus build."""
-    import pyarrow.parquet as pq
-    import glob as _glob
-
-    from pypdfocr_spark.config import HEAVY_PAYLOAD_BYTES
-
     path = str(tmp_path / "corpus")
     out = pipeline.materialize_corpus(spark, "/root/testdata/sf0.001", path)
     direct = pipeline.build_corpus_df(spark, "/root/testdata/sf0.001")
     assert sorted(r["url"] for r in out.select("url").collect()) == sorted(
         r["url"] for r in direct.select("url").collect()
     )
+    mixed = _size_class_mixed_files(path)
+    assert mixed == [], f"files mixing size classes: {mixed}"
+
+
+def test_corpus_in_another_layout_is_rebuilt(spark, tmp_path):
+    """A cached corpus directory written in another layout (here one file
+    holding both size classes) and carrying no layout tag is rebuilt in the
+    size-class file layout; once tagged it is reused as is."""
+    path = str(tmp_path / "corpus")
+    pipeline.build_corpus_df(spark, SF_SMOKE).coalesce(1).write.parquet(path)
+    assert _size_class_mixed_files(path), "precondition: a mixed-layout corpus"
+    out = pipeline.extract_from_documents(spark, SF_SMOKE, ExtractConfig(), corpus_path=path)
+    mixed = _size_class_mixed_files(path)
+    assert mixed == [], f"files mixing size classes: {mixed}"
+    files = sorted(os.listdir(path))
+    pipeline.extract_from_documents(spark, SF_SMOKE, ExtractConfig(), corpus_path=path)
+    assert sorted(os.listdir(path)) == files
+    assert out.count() == 400
+
+
+def test_commit_unpersists_when_write_fails(spark, tmp_path, monkeypatch):
+    """A failed write (one failed --watch micro-batch) re-raises and leaves
+    no cached DataFrame behind."""
+    from pypdfocr_spark import catalog
+
+    def failing_append(*args, **kw):
+        raise RuntimeError("injected write failure")
+
+    df = spark.range(3).withColumn("status", F.lit("ok"))
+    monkeypatch.setattr(catalog, "append", failing_append)
+    with pytest.raises(RuntimeError, match="injected"):
+        lineage.commit(df, str(tmp_path))
+    assert not df.is_cached
+
+
+def _slow_for(real, slow_arg, seconds=0.05):
+    """``real`` that first sleeps ``seconds`` when its first argument is
+    ``slow_arg``."""
+
+    def kernel(first, *args, **kw):
+        if first == slow_arg:
+            time.sleep(seconds)
+        return real(first, *args, **kw)
+
+    return kernel
+
+
+@pytest.mark.parametrize("branch", ["light", "heavy"])
+def test_wall_ms_is_per_document(monkeypatch, branch):
+    """wall_ms times each document (light) or page spec (heavy) on its
+    own: one slow document in a 4-row batch is the only slow row."""
+    rows = [
+        ck.build_corpus_row(d, "spark column window row data", "en", "s") for d in (1, 2, 4, 5)
+    ]
+    pdf = pd.DataFrame(rows)
+    cfg = ExtractConfig()
+    slow = 2
+    if branch == "light":
+        slow_payload = bytes(pdf["html"].iloc[slow])
+        monkeypatch.setattr(pipeline, "_doc_kernel", _slow_for(pipeline._doc_kernel, slow_payload))
+        got = pipeline._extract_rows(pdf, cfg)
+    else:
+        pages = pipeline._explode_rows(pdf, cfg)
+        assert list(pages["url"]) == list(pdf["url"])  # one page each
+        spec = (pages["page_kind"].iloc[slow], pages["page_json"].iloc[slow])
+        monkeypatch.setattr(ck, "page_text", _slow_for(ck.page_text, spec))
+        got = pipeline._page_text_rows(pages, cfg)
+    assert list(got["url"]) == list(pdf["url"])
+    assert got["wall_ms"].iloc[slow] >= 50
+    assert all(w < 25 for i, w in enumerate(got["wall_ms"]) if i != slow)
+
+
+def _size_class_mixed_files(path):
+    """Parquet files under ``path`` whose n_bytes range straddles the
+    light/heavy threshold, as (file, min, max)."""
     mixed = []
-    for f in _glob.glob(path + "/*.parquet"):
+    for f in glob.glob(path + "/*.parquet"):
         md = pq.ParquetFile(f).metadata
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
@@ -315,4 +393,4 @@ def test_materialize_corpus_size_class_file_layout(spark, tmp_path):
                     lo, hi = c.statistics.min, c.statistics.max
                     if lo <= HEAVY_PAYLOAD_BYTES < hi:
                         mixed.append((f, lo, hi))
-    assert mixed == [], f"files mixing size classes: {mixed}"
+    return mixed
